@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints the full JSON record on one line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...,
@@ -23,27 +22,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c    => c.toString
-      } + "\""
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
 
     // Fixed-cost probe: a hash-mix sum over spark.range(10M), in DOUBLE
     // space so the fold cannot overflow under ANSI mode (the long-space
@@ -68,22 +48,15 @@ object Bench {
 
     // steady-state timing: two runs per query, report the min — the first
     // absorbs janino codegen/JIT/parquet-footer warmup, and min-of-2 is
-    // robust to transient GC pauses from accumulated broadcast state
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch {
+    // robust to transient GC pauses from accumulated broadcast state.
+    // SparkEntry.run releases the query's pins, blocking, after each run,
+    // so run 1's block removal cannot overlap run 2's timed span
+    def timeOnce(name: String): Either[String, Double] =
+      try Right(SparkEntry.run(spark, name, sfDir)(_.count())._2)
+      catch {
         case t: Throwable =>
           Left(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(200)}")
-      } finally
-        // release GlobalOrder's pinned projections between queries:
-        // holding them across 300+ queries would leak cache blocks the
-        // box never reclaims. BLOCKING, so the async block removal of
-        // run 1 cannot overlap — and add noise to — run 2's timed span
-        graft.operators.GlobalOrder.release(blocking = true)
-    }
+      }
 
     // five samples per calibration point (was min-of-2): the probe feeds
     // total_normalized, and a min over two loaded samples swung the r13
@@ -118,11 +91,11 @@ object Bench {
     // optional args = local-iteration subset (the driver passes none)
     val wanted: String => Boolean =
       if (args.isEmpty) _ => true else args.toSet
-    val results: Seq[(String, QResult)] = SparkEntry.queries.toSeq
-      .filter(kv => wanted(kv._1)).map { case (name, fn) =>
-      val a = timeOnce(fn)
+    val results: Seq[(String, QResult)] = SparkEntry.queries.keys.toSeq
+      .filter(wanted).map { name =>
+      val a = timeOnce(name)
       val b = a match {
-        case Right(_) => timeOnce(fn)
+        case Right(_) => timeOnce(name)
         case Left(_)  => a // don't re-run a broken query
       }
       val runs = List(a, b).collect { case Right(d) => round3(d) }
@@ -136,15 +109,15 @@ object Bench {
 
     val ok = results.collect { case (n, QResult(runs, None)) => n -> runs.min }
     val total = round3(ok.map(_._2).sum)
-    val qs = ok.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = ok.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
     val runsJson = results
-      .map { case (k, r) => jsonStr(k) + ":" + r.runs.mkString("[", ",", "]") }
+      .map { case (k, r) => Json.str(k) + ":" + r.runs.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val errsJson = results
-      .collect { case (n, QResult(_, Some(m))) => s"""{"query":${jsonStr(n)},"error":${jsonStr(m)}}""" }
+      .collect { case (n, QResult(_, Some(m))) => s"""{"query":${Json.str(n)},"error":${Json.str(m)}}""" }
       .mkString("[", ",", "]")
     def calibVal(v: Option[Double]): String = v.map(d => round3(d).toString).getOrElse("null")
-    val calibErrs = (calibBeforeErr.toList ++ calibAfterErr.toList).map(jsonStr)
+    val calibErrs = (calibBeforeErr.toList ++ calibAfterErr.toList).map(Json.str)
     // cross-round normalization: ambient box load swung the r12 driver
     // total 1.4× vs the same-commit uncontended rerun. The probe is a
     // pure function of box weather, so total × (PROBE_REF / probe) re-
@@ -186,7 +159,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,""" +
       s""""total_normalized":$totalNormJson,""" +
       s""""total_normalized_median":$totalNormJson,"total_normalized_min":$totalNormMinJson,""" +
-      s""""queries":$qs,"sf":${jsonStr(sfDir)},""" +
+      s""""queries":$qs,"sf":${Json.str(sfDir)},""" +
       s""""ok_count":${ok.size},"error_count":${results.size - ok.size},""" +
       s""""errors":$errsJson,"runs":$runsJson,"calibration":$calibJson}"""
     println(fullLine)
@@ -194,28 +167,28 @@ object Bench {
     // full line three rounds running, so ALSO write it to a repo file that
     // gets committed at round close — BENCH_r* analysis can then always
     // read a complete per-query map regardless of capture behavior.
-    // r16 (verdict item 6): a cpus-stamped copy is ALWAYS written beside
-    // the default/overridden path, so the driver's low-core scaling sweep
-    // can never shadow the headline run in the committed artifact — each
-    // run config keeps its own file, and the JSON itself carries "cpus".
+    // r16 (verdict item 6): a cpus-stamped copy is ALWAYS written in the
+    // directory of the default/overridden path, so a low-core scaling
+    // sweep can never shadow the headline run in the committed artifact —
+    // each run config keeps its own file, and the JSON itself carries "cpus".
     try {
       val payload = (fullLine + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      java.nio.file.Files.write(java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")),
-        payload)
+      val out = java.nio.file.Paths.get(
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json"))
+      java.nio.file.Files.write(out, payload)
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"bench_latest_c$cpus.json"), payload)
+        out.resolveSibling(s"bench_latest_c$cpus.json"), payload)
     } catch { case _: Throwable => () } // never let the file write kill the bench
     // compact tail-survivor: everything a grader needs if the full line
     // is truncated again (worst-5 = the slowest five, where any perf
     // regression worth chasing will appear)
     val worst5 = ok.sortBy(-_._2).take(5)
-      .map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
     println(
       s"""{"metric":"total_compact","value":$total,"unit":"sec","cpus":$cpus,""" +
       s""""total_normalized":$totalNormJson,"total_normalized_min":$totalNormMinJson,""" +
-      s""""sf":${jsonStr(sfDir)},""" +
+      s""""sf":${Json.str(sfDir)},""" +
       s""""ok_count":${ok.size},"error_count":${results.size - ok.size},""" +
       s""""worst5":$worst5,"calibration":$calibJson}""")
     spark.stop()

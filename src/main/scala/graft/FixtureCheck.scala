@@ -113,14 +113,7 @@ object FixtureCheck {
       if (args.nonEmpty) args.toSeq
       else Seq("sf0.001", "sf0.01", "sf0.1").map("/root/testdata/" + _)
         .filter(d => new java.io.File(d).exists())
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     dirs.foreach { d =>
       println(s"== $d ==")
       expected.foreach { case (table, _) =>

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * Two entry points with identical results:
   *  - `GraftFunctions.registerAll(spark)` on a live session;
-  *  - `SparkSession.builder().withExtensions(new GraftExtensions)` at
+  *  - `.withExtensions(new GraftExtensions)` on the session builder at
   *    build time (also usable via the
   *    `spark.sql.extensions=graft.GraftExtensions` conf on a cluster).
   */

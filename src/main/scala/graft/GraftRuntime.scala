@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * extensions on sessions the library does NOT build itself (the
   * driver's Verify/Bench sessions, a user's existing session).
   *
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` remains
+  * `.withExtensions(new GraftExtensions)` on the session builder remains
   * the preferred build-time path; this is the live-session equivalent,
   * using `spark.experimental` (strategies + extraOptimizations) because
   * `SparkSessionExtensions` cannot be installed after session build.

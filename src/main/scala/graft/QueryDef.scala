@@ -10,17 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ordering on a unique key, timestamp_ntz on both sides, rounded doubles
   * where summation order could differ.
   *
-  * CACHE-RELEASE CONTRACT: some query programs pin MEMORY_AND_DISK
-  * frames for cross-job consistency or iterative reuse
-  * ([[graft.operators.GlobalOrder.withGlobalRowNumber]] projections,
-  * `Release.partitionedEdgeCache` edge frames). The pins land on
-  * GlobalOrder's default handle; the caller that materializes the
-  * result MUST drain them afterwards via `GlobalOrder.release()` —
-  * Verify, Bench, ScaleProbe, and the spec harness all do, per query.
-  * A caller that skips the release leaks pinned blocks per invocation
-  * (disk-backed blocks are never LRU-reclaimed until context shutdown).
-  * Concurrent callers in one JVM wrap execution in
-  * `GlobalOrder.scoped { ... }` and release the returned handle instead.
+  * Pins: some query programs persist frames that must outlive the
+  * consuming action ([[graft.operators.GlobalOrder]]). Run a query
+  * through `SparkEntry.run`; a direct caller of `SparkEntry.queries`
+  * calls `GlobalOrder.release()` after materializing the result.
   */
 final case class QueryDef(
     name: String,

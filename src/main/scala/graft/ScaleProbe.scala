@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Growth-under-scale probe: materializes a FACTOR× (default 10×, ≈sf1)
@@ -38,15 +38,7 @@ object ScaleProbe {
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val subset = args.drop(3).toSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     spark.sparkContext.setCheckpointDir(s"$dst/_checkpoints")
 
     def base(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
@@ -285,22 +277,17 @@ object ScaleProbe {
       .filter(q => subset.isEmpty || subset(q))
 
     // returns (cold = run 1, min-of-2, rows). r16 (verdict item 5):
-    // pins are RELEASED between the two runs — run 2 recomputes from
-    // the parquet inputs for every query, matching Bench.timeOnce's
-    // contract, so the warm column means one thing for all queries.
+    // pins are RELEASED between the two runs (SparkEntry.run releases
+    // after every run, as for Bench) — run 2 recomputes from the parquet
+    // inputs for every query, so the warm column means one thing for all
+    // queries.
     // (Pre-r16 probe rows let run 2 replay run 1's pinned caches, so
     // their warm/min columns for self-pinning queries measured a cache
     // read — compare those rows on the COLD column only.)
     def timeMin2(name: String, dir: String): (Double, Double, Long) = {
-      def once(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        try {
-          val n = SparkEntry.queries(name)(spark, dir).count()
-          ((System.nanoTime() - t0) / 1e9, n)
-        } finally graft.operators.GlobalOrder.release(blocking = true)
-      }
-      val a = once(); val b = once()
-      (a._1, math.min(a._1, b._1), b._2)
+      val (_, a) = SparkEntry.run(spark, name, dir)(_.count())
+      val (n, b) = SparkEntry.run(spark, name, dir)(_.count())
+      (a, math.min(a, b), n)
     }
 
     // Queries whose 100× rows showed ±30% run-to-run spread on IDENTICAL
@@ -313,11 +300,7 @@ object ScaleProbe {
     // the range, never a point.
     val HighVariance = Set("q_hub_robustness")
     def timeHV(name: String, dir: String): (String, String, Long) = {
-      val samples = (1 to 3).map { _ =>
-        val r = timeMin2(name, dir)
-        graft.operators.GlobalOrder.release(blocking = true)
-        r
-      }
+      val samples = (1 to 3).map(_ => timeMin2(name, dir))
       def med(xs: Seq[Double]): Double = xs.sorted.apply(1)
       def cell(xs: Seq[Double]): String =
         f"${med(xs)}%.2f [${xs.min}%.2f–${xs.max}%.2f]"
@@ -341,12 +324,7 @@ object ScaleProbe {
         case t: Throwable =>
           println(s"| $q | ERROR ${t.getClass.getSimpleName}: " +
             s"${Option(t.getMessage).getOrElse("").take(120)} |")
-      } finally
-        // belt-and-braces release between queries (timeMin2 already
-        // releases after every run): without draining, a long probe
-        // list accumulates MEMORY_AND_DISK blocks the JVM never
-        // reclaims and the sweep eventually OOMs at 100×
-        graft.operators.GlobalOrder.release(blocking = true)
+      }
     }
     spark.stop()
   }

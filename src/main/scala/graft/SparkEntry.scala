@@ -63,4 +63,27 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Builds query `name` over `dir`, hands the frame to `sink`, and returns
+    * the sink's result with the wall seconds of build plus sink.
+    *
+    * Build and sink run inside a fresh [[operators.GlobalOrder.scoped]]
+    * handle, so every frame the query pins belongs to this call alone.
+    * The handle is released, blocking, on every path, a throwing build
+    * or sink included; the release is not part of the returned seconds.
+    * Concurrent calls on one session are safe. */
+  def run[T](spark: SparkSession, name: String, dir: String)(
+      sink: DataFrame => T): (T, Double) = {
+    val fn = queries(name)
+    val t0 = System.nanoTime()
+    val (out, pins) = operators.GlobalOrder.scoped {
+      try Right(sink(fn(spark, dir))) catch { case t: Throwable => Left(t) }
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    pins.release(blocking = true)
+    out match {
+      case Right(v) => (v, sec)
+      case Left(t)  => throw t
+    }
+  }
 }

@@ -65,9 +65,8 @@ object GlobalOrder {
     }
   }
 
-  /** Pins from callers outside any [[scoped]] block land here — the
-    * sequential Verify/Bench/spec harnesses, which drain it per query
-    * via the process-global [[release]]. */
+  /** Pins from callers outside any [[scoped]] block land here; the
+    * process-global [[release]] drains it. */
   private val defaultHandle = new PinHandle
 
   /** The handle receiving pins on the current thread — thread-local
@@ -84,16 +83,9 @@ object GlobalOrder {
     * iterative rounds (q_ppr / q_weighted_pagerank pre-partition the
     * edge frame by join key once so the 6–8 power rounds shuffle only
     * the skinny rank side; the cache must outlive the final action but
-    * not the session). Caller persists; this only scopes the release.
-    *
-    * RELEASE CONTRACT (documented on [[graft.QueryDef]] too): pins land
-    * on the DEFAULT handle unless the caller runs inside [[scoped]].
-    * The sequential harnesses (Verify / Bench / ScaleProbe / specs)
-    * drain the default handle per query; any OTHER caller executing a
-    * pinning query must call [[release]] after materializing its output
-    * or wrap the run in [[scoped]] and release that handle — otherwise
-    * every invocation leaks MEMORY_AND_DISK blocks for the session
-    * lifetime. */
+    * not the session). Caller persists; this only scopes the release:
+    * run through `SparkEntry.run`; a direct caller of
+    * `SparkEntry.queries` calls [[release]]. */
   private[graft] def pinPersisted(df: DataFrame): DataFrame = pin(df)
 
   /** Runs `body` with a FRESH per-invocation handle and returns
@@ -107,14 +99,14 @@ object GlobalOrder {
     (current.withValue(h)(body), h)
   }
 
-  /** Unpersists every ranked projection pinned OUTSIDE any [[scoped]]
-    * block since the last call — the sequential-harness convenience
-    * (Verify and Bench call it per query). Re-executing a previously
-    * returned frame after release would recompute the projection and
-    * lose the cross-job boundary consistency the persist exists for;
-    * materialize once, release, re-derive if needed. Concurrent callers
-    * must use [[scoped]] instead: this drains only the default handle,
-    * so it cannot reach — and cannot break — their pins. */
+  /** Unpersists every frame pinned OUTSIDE any [[scoped]] block since
+    * the last call: run through `SparkEntry.run`; a direct caller of
+    * `SparkEntry.queries` calls this after materializing the result.
+    * Re-executing a previously returned frame after release would
+    * recompute the projection and lose the cross-job boundary
+    * consistency the persist exists for; materialize once, release,
+    * re-derive if needed. This drains only the default handle, so it
+    * cannot reach scoped pins. */
   def release(blocking: Boolean = false): Unit = defaultHandle.release(blocking)
 
   /** Adds a dense 1-based `out` BIGINT column: the row's position under

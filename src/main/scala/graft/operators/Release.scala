@@ -138,11 +138,9 @@ object Release {
     * layout is NOT a substitute — it avoids the exchange but not the
     * per-round parquet re-decode (measured 3.6× worse; BENCH.md r13).
     *
-    * The frame is pinned via [[GlobalOrder.pinPersisted]], so the
-    * harness's per-query release drains the blocks after the consuming
-    * action — callers outside Verify/Bench/ScaleProbe must drain via
-    * `GlobalOrder.release()` (or run inside `GlobalOrder.scoped`) or
-    * the MEMORY_AND_DISK blocks leak for the session lifetime.
+    * The frame is pinned via [[GlobalOrder.pinPersisted]]: run through
+    * `SparkEntry.run`; a direct caller of `SparkEntry.queries` calls
+    * `GlobalOrder.release()`.
     *
     * CUT POLICY for the loop body built on top of this cache: cut
     * lineage ([[cutLineage]]) at depth ≤ 2 — the per-round join
